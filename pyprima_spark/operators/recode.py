@@ -5,33 +5,33 @@ python dict, and renames/relabels rows before regrouping (e.g. country
 renaming in clean_load_data_ENTSOE, correction_functions.py:298-313;
 sector reclassification in clean_sector_shares_Eurostat:342-368).
 
-Spark-first: the dict becomes a broadcast literal DataFrame and the
-recode is a broadcast hash join — no shuffle of the fact side, and at
-100 TB the dim stays driver-sized. Unmatched keys keep their original
-value (left join + coalesce), matching ``dict.get(k, k)`` semantics.
+Spark-first: the dict becomes a map literal inside one projection,
+looked up with ``try_element_at`` — no join, no shuffle, and no Python
+round trip (a ``createDataFrame`` dictionary would start Python workers
+and run a broadcast job on every plan that recodes). Unmatched keys
+keep their original value (``coalesce``), matching ``dict.get(k, k)``
+semantics; a NULL key stays NULL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from itertools import chain
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def recode_column(
-    spark: SparkSession,
     df: DataFrame,
     col: str,
     mapping: dict[str, str],
     out_col: str | None = None,
 ) -> DataFrame:
     out_col = out_col or col
-    map_df = spark.createDataFrame(
-        list(mapping.items()), schema=f"__recode_key string, __recode_val string"
+    lookup = F.create_map(*(F.lit(x) for x in chain.from_iterable(mapping.items())))
+    return df.withColumn(
+        out_col, F.coalesce(F.try_element_at(lookup, F.col(col)), F.col(col))
     )
-    joined = df.join(F.broadcast(map_df), df[col] == map_df["__recode_key"], "left")
-    return joined.withColumn(
-        out_col, F.coalesce(F.col("__recode_val"), F.col(col))
-    ).drop("__recode_key", "__recode_val")
 
 
 def mapping_values_sql(mapping: dict[str, str]) -> str:

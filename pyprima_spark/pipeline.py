@@ -6,11 +6,38 @@ Each stage materializes its outputs as parquet (partitioned where a
 downstream consumer would prune on the key), and the final model export
 also lands in the reference's European CSV convention. Stages read the
 catalog lazily, so a stage's unused inputs are never scanned.
+
+Concurrent run. Every output of ``run_pipeline`` reads only the raw
+input tables, never another output, so the three phases are an order
+for the manifest, not a dependency chain. Each output runs a handful
+of small Spark jobs; written one at a time, they would leave most
+cores idle while one Python thread plans and schedules the next. So
+the outputs go to a thread pool of ``min(#outputs,
+defaultParallelism)`` workers: one worker per core the scheduler can
+fill, and no more threads than there are outputs.
+Spark's default FIFO scheduler then shares the cores between the
+concurrent writes. The pool size is not an option.
+
+Each task takes the next output and builds its plan while holding one
+lock, then writes it after releasing the lock. The lock is there
+because the plan builders were not written for concurrent callers:
+``catalog.load_table`` fills an unguarded memo and calls
+``spark.conf.set``, and some builders run Spark jobs while planning.
+Builds therefore run one at a time and in manifest order, while the
+writes of earlier outputs run on the other workers. Each task runs
+with a copy of the caller's Spark local properties and tags, so a
+caller's job group or scheduler pool covers every stage job. On the
+first failure the tasks not yet started are cancelled, the running
+writes finish, and the error is re-raised: a partial manifest is never
+returned.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
 from pyspark.sql import SparkSession
 
@@ -46,24 +73,52 @@ def run_pipeline(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> dict[str, str]:
     """Run all three stages; returns {output name: path} manifest."""
+    from pyspark import inheritable_thread_target
+
     from pyprima_spark.plans.queries import QUERIES
     from pyprima_spark.sources.readers import write_european_csv
 
-    manifest: dict[str, str] = {}
-    for stage in (CLEANING, INTERMEDIATE, MODEL):
-        for name in stage:
-            path = os.path.join(out_dir, name)
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").parquet(path)
-            manifest[name] = path
+    def write_parquet(df, path: str) -> None:
+        df.write.mode("overwrite").parquet(path)
 
+    # (output name, QUERIES key, writer) in manifest order.
+    outputs = [
+        (name, name, write_parquet)
+        for stage in (CLEANING, INTERMEDIATE, MODEL)
+        for name in stage
+    ]
     # Model files additionally ship in the reference's CSV convention
     # (to_csv(sep=';', decimal=',') throughout generate_models.py).
-    csv_path = os.path.join(out_dir, "demand_matrix_csv")
-    write_european_csv(
-        QUERIES["export_demand_matrix"](spark, sf_dir), csv_path
-    )
-    manifest["demand_matrix_csv"] = csv_path
-    return manifest
+    outputs.append(("demand_matrix_csv", "export_demand_matrix", write_european_csv))
+
+    # Tasks are not bound to outputs: whichever task holds the lock
+    # takes the next output, so builds follow manifest order.
+    todo = deque(outputs)
+    build_lock = threading.Lock()
+
+    def run_next() -> None:
+        with build_lock:
+            name, key, write = todo.popleft()
+            df = QUERIES[key](spark, sf_dir)
+        write(df, os.path.join(out_dir, name))
+
+    def with_caller_properties():
+        # Wrapped once per task, so each gets its own copy of the
+        # caller's local properties. Without pinned threads PySpark
+        # returns the session itself: properties are not per thread
+        # then, and there is nothing to copy.
+        inherit = inheritable_thread_target(spark)
+        return inherit(run_next) if callable(inherit) else run_next
+
+    workers = min(len(outputs), spark.sparkContext.defaultParallelism)
+    pool = ThreadPoolExecutor(workers, thread_name_prefix="run_pipeline")
+    try:
+        futures = [pool.submit(with_caller_properties()) for _ in outputs]
+        for done in as_completed(futures):
+            done.result()
+    finally:
+        pool.shutdown(cancel_futures=True)
+    return {name: os.path.join(out_dir, name) for name, _, _ in outputs}
 
 
 def run_curation(

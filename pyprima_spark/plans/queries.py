@@ -124,8 +124,9 @@ def recode_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: clean_load_data_ENTSOE renames ENTSO-E country codes via
     dict_countries then groups columns with the same new name
-    (correction_functions.py:298-313). Broadcast map join, no fact-side
-    shuffle until the final group.
+    (correction_functions.py:298-313). The recode is a map-literal
+    lookup on the nation dim (operators/recode.py), which then joins
+    by broadcast: no fact-side shuffle until the final group.
     """
     from pyprima_spark.operators.recode import recode_column
     from pyprima_spark.plans.constants import NATION_RECODE
@@ -133,7 +134,7 @@ def recode_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
-    recoded = recode_column(spark, nation, "n_name", NATION_RECODE, "country")
+    recoded = recode_column(nation, "n_name", NATION_RECODE, "country")
     return (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(recoded), cust.c_nationkey == recoded.n_nationkey)

@@ -965,10 +965,14 @@ def binary_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: codes are built map-side in one projection (no
     shuffle); the query side is a bounded broadcast (vec_id % 25 = 3);
-    both rankings are query-partitioned WindowGroupLimit elections
-    over ONE scored pass (dot and hamming computed together);
-    at 100 TB the same plan holds because the candidate side never
-    shuffles and the per-query state is the top-k heap.  Hamming
+    dot and hamming are computed together in ONE scored pass, and both
+    rankings are row_number windows partitioned by query_id that share
+    ONE exchange.  No rank filter precedes the aggregate, so there is
+    no WindowGroupLimit / top-k pruning: every scored pair flows
+    through both windows into a groupBy on the windows' own
+    partitioning, and the per-query state is that query's full
+    candidate list.  The candidate side never shuffles before the
+    window exchange, which carries the whole scored-pair mass.  Hamming
     ties are pinned by vec_id on both engines. Growth law (STRESS
     r10): scored-pair mass = |queries| × |corpus|; the mod-25 query
     set grows WITH the corpus here, so N× replication measures ~N² —

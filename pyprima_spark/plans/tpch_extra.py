@@ -48,6 +48,19 @@ def _dstr(col: str) -> F.Column:
 # q2 — min-cost supplier (correlated MIN subquery as window-min)
 # ---------------------------------------------------------------------------
 
+def _q2_cost4_sql(div: str) -> str:
+    """price / qty rounded HALF-AWAY-FROM-ZERO to 4 places, in units of
+    1e-4, as an exact integer (quality_score's rounding). With NUM and
+    DEN the micro-unit integers of price and qty (DEN > 0), it is
+    (2·10⁴·NUM ± DEN) ``div`` (2·DEN); ``div`` is the engine's integer
+    division, Spark ``div`` or DuckDB ``//``, both truncating toward
+    zero. Rounding is monotone, so min() of the rounded values is the
+    rounded min."""
+    num = "cast(cast(l_extendedprice as decimal(27,6)) * 1000000 as bigint)"
+    den = "cast(cast(l_quantity as decimal(27,6)) * 1000000 as bigint)"
+    return f"(20000 * {num} + if({num} >= 0, {den}, -{den})) {div} (2 * {den})"
+
+
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For each SMALL part of size <= 15, the supplier(s) offering the
     minimum observed unit price; top 100 by account balance.
@@ -55,6 +68,12 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The correlated ``cost = (SELECT min ...)`` is a window-min over the
     part key — one shuffle on l_partkey, no re-scan. Part filter prunes
     before the join; supplier/nation/region dims broadcast.
+
+    The reported ``supplycost`` rounds in exact integer space (see
+    ``_q2_cost4_sql``): ``round(double, 4)`` of the quotient disagreed
+    with DuckDB by 1e-4 whenever the decimal quotient ended in 5 at
+    the fifth place (213.70625 -> Spark 213.7062, DuckDB 213.7063).
+    The double ``min`` still elects the supplier, so ties are unchanged.
     """
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(
@@ -65,7 +84,10 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = (
         li.join(part.select("p_partkey", "p_name"), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_partkey", "p_name", "l_suppkey")
-        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("supplycost"))
+        .agg(
+            F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("supplycost"),
+            F.min(F.expr(_q2_cost4_sql("div"))).alias("cost4"),
+        )
     )
     w = Window.partitionBy("l_partkey")
     best = ps.withColumn("min_cost", F.min("supplycost").over(w)).filter(
@@ -80,17 +102,18 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_name",
             F.col("l_partkey").alias("p_partkey"),
             "p_name",
-            F.round("supplycost", 4).alias("supplycost"),
+            (F.col("cost4").cast("double") / 10000).alias("supplycost"),
         )
         .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
         .limit(100)
     )
 
 
-ORACLE_Q2 = """
+ORACLE_Q2 = f"""
 WITH ps AS (
   SELECT l_partkey, p_name, l_suppkey,
-         min(l_extendedprice / l_quantity) AS supplycost
+         min(l_extendedprice / l_quantity) AS supplycost,
+         min({_q2_cost4_sql("//")}) AS cost4
   FROM lineitem
   JOIN part ON l_partkey = p_partkey
   WHERE p_size <= 15 AND p_type = 'SMALL'
@@ -100,7 +123,7 @@ best AS (
   SELECT *, min(supplycost) OVER (PARTITION BY l_partkey) AS min_cost FROM ps
 )
 SELECT round(s_acctbal, 2) AS s_acctbal, s_name, n_name,
-       l_partkey AS p_partkey, p_name, round(supplycost, 4) AS supplycost
+       l_partkey AS p_partkey, p_name, cost4::DOUBLE / 10000 AS supplycost
 FROM best
 JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation ON s_nationkey = n_nationkey

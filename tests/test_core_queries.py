@@ -16,6 +16,47 @@ def test_query_matches_oracle(spark, sf_dir, name):
     assert_matches_oracle(df, ORACLES[name], sf_dir)
 
 
+def test_q2_rounds_ties_exactly(spark, tmp_path):
+    """q2's supplycost rounds price/qty half away from zero in exact
+    integers on both engines. Each crafted quotient ends in 5 at the
+    fifth decimal: round(double, 4) sent 100.079/28 = 3.574250 to
+    3.5742 in Spark and 100.067/4 = 25.016750 to 25.0167 in DuckDB."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_utils import normalize, run_oracle
+
+    tables = {
+        "lineitem": {
+            "l_partkey": [1, 2, 2],
+            "l_suppkey": [1, 2, 3],
+            "l_quantity": [28.0, 4.0, 4.0],
+            "l_extendedprice": [100.079, 100.067, 200.0],
+        },
+        "part": {
+            "p_partkey": [1, 2],
+            "p_name": ["p1", "p2"],
+            "p_type": ["SMALL", "SMALL"],
+            "p_size": [5, 15],
+        },
+        "supplier": {
+            "s_suppkey": [1, 2, 3],
+            "s_name": ["s1", "s2", "s3"],
+            "s_nationkey": [0, 0, 0],
+            "s_acctbal": [10.0, 20.0, 30.0],
+        },
+        "nation": {"n_nationkey": [0], "n_name": ["N0"]},
+    }
+    for name, cols in tables.items():
+        pq.write_table(pa.table(cols), str(tmp_path / f"{name}.parquet"))
+    sf = str(tmp_path)
+    got = normalize(QUERIES["q2_min_cost_supplier"](spark, sf).toPandas())
+    want = normalize(run_oracle(ORACLES["q2_min_cost_supplier"], sf))
+    assert got.to_dict("records") == want.to_dict("records")
+    costs = dict(zip(got["p_partkey"], got["supplycost"]))
+    assert costs == {1: 3.5743, 2: 25.0168}
+
+
 def test_every_query_has_rows(spark, sf_dir):
     for name, fn in QUERIES.items():
         assert fn(spark, sf_dir).count() >= 0, name

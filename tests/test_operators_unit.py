@@ -19,6 +19,18 @@ def test_interval_bin_maps_to_smallest_bound_geq(spark):
     assert [r.c for r in out] == ["a", "a", "b", "b", "z"]
 
 
+def test_recode_column_dict_get_semantics(spark):
+    # dict.get(k, k): mapped keys recode, an unmapped key keeps its
+    # value, and a NULL key stays NULL
+    from pyprima_spark.operators.recode import recode_column
+
+    df = spark.createDataFrame([(1, "a"), (2, "zz"), (3, None)], "id int, k string")
+    out = recode_column(df, "k", {"a": "A", "b": "B"}, "r").orderBy("id").collect()
+    assert [(r.k, r.r) for r in out] == [("a", "A"), ("zz", "zz"), (None, None)]
+    same = recode_column(df, "k", {"a": "A"}).orderBy("id").collect()
+    assert [r.k for r in same] == ["A", "zz", None]
+
+
 def test_expand_multivalue_row_per_token(spark):
     from pyprima_spark.operators.expand import expand_multivalue
 
